@@ -11,6 +11,7 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,10 +33,16 @@ TABLES = (
 
 def _parquet_ts_unit(path: str, field: str = "ts") -> str | None:
     """Footer-only probe (pyarrow, no Spark job) for a timestamp column's
-    physical resolution ('ns'/'us'/'ms'), or None if absent/not a timestamp."""
+    physical resolution ('ns'/'us'/'ms'), or None if absent/not a timestamp
+    or the path has a URI scheme (the probe reads the local filesystem)."""
     import glob
     import os
 
+    if "://" in path:
+        # pyarrow raises ArrowInvalid on schemes it has no filesystem for
+        # (s3a://, hdfs:// without libhdfs) and may open a remote connection
+        # for the rest; a remote table takes the plain spark.read route
+        return None
     import pyarrow.parquet as pq
 
     if os.path.isdir(path):
@@ -76,18 +83,36 @@ def _schema_cache_key(path: str) -> tuple[str, str] | None:
         return None
 
 
+_MEMO_LOCK = threading.Lock()
+
+
+def _memo_get(memo: dict, key):
+    """LRU lookup: a hit moves the entry to the young end of the dict order,
+    so the eviction in ``_memo_put`` drops the least recently USED entry."""
+    with _MEMO_LOCK:
+        value = memo.pop(key, None)
+        if value is not None:
+            memo[key] = value
+        return value
+
+
+def _memo_put(memo: dict, key: tuple, value, bound: int = 256) -> None:
+    """Insert into a (path, fingerprint)-keyed memo with a bound that evicts
+    STALE entries first: superseded fingerprints of the SAME path (in-place
+    rewrites, per-run staged copies under a reused dir), then — if still
+    full of live entries — the least recently used one, so the ten hot
+    fixed-table entries that every pass hits survive a stream of one-off
+    paths (r11 ADVICE #4)."""
+    with _MEMO_LOCK:
+        for k in [k for k in memo if k[0] == key[0] and k != key]:
+            del memo[k]
+        while len(memo) >= bound:
+            del memo[next(iter(memo))]
+        memo[key] = value
+
+
 def _schema_cache_put(key: tuple[str, str], schema: T.StructType) -> None:
-    """Insert with a bound that evicts only STALE entries: first drop
-    superseded fingerprints of the SAME path (in-place rewrites, per-run
-    staged copies under a reused dir), then — if genuinely full of live
-    entries — drop oldest-inserted (dict order) rather than clearing the
-    ten hot fixed-table entries wholesale (r11 ADVICE #4)."""
-    stale = [k for k in _SCHEMA_CACHE if k[0] == key[0] and k != key]
-    for k in stale:
-        del _SCHEMA_CACHE[k]
-    while len(_SCHEMA_CACHE) >= 256:
-        del _SCHEMA_CACHE[next(iter(_SCHEMA_CACHE))]
-    _SCHEMA_CACHE[key] = schema
+    _memo_put(_SCHEMA_CACHE, key, schema)
 
 
 def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
@@ -102,7 +127,7 @@ def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
     key = _schema_cache_key(path)
     if key is None:
         return spark.read.parquet(path)
-    cached = _SCHEMA_CACHE.get(key)
+    cached = _memo_get(_SCHEMA_CACHE, key)
     if cached is not None:
         return spark.read.schema(cached).parquet(path)
     df = spark.read.parquet(path)
@@ -113,7 +138,7 @@ def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
     cache_key = _schema_cache_key(path)
-    cached = _SCHEMA_CACHE.get(cache_key) if cache_key is not None else None
+    cached = _memo_get(_SCHEMA_CACHE, cache_key) if cache_key is not None else None
     if cached is not None:
         df = spark.read.schema(cached).parquet(path)
     elif name == "events" and _parquet_ts_unit(path) == "ns":

@@ -28,10 +28,6 @@ def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc
     )
 
 
-def token_sets(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    return df.select(id_col, F.array_distinct(tokens(text_col)).alias("tok_set"))
-
-
 def jaccard(a: F.Column, b: F.Column) -> F.Column:
     """Jaccard similarity of two distinct-element arrays."""
     inter = F.size(F.array_intersect(a, b))

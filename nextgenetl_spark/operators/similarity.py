@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from nextgenetl_spark.catalog import read_parquet_cached
+from nextgenetl_spark.catalog import _memo_get, _memo_put, _schema_cache_key, read_parquet_cached
 
 
 def dot(a, b) -> F.Column:
@@ -1791,6 +1791,54 @@ def build_ivfpq_index(
     }
 
 
+#: Driver-held small artifacts of persisted IVF-PQ indexes, keyed like the
+#: catalog schema memo: (index_dir, fingerprints of meta/, codebooks/ and
+#: centroids/). Appends write only codes/ and vectors/, so an entry stays
+#: valid across appends; a rebuild moves the fingerprint.
+_ARTIFACT_MEMO: dict = {}
+_SMALL_ARTIFACTS = ("meta", "codebooks", "centroids")
+
+
+def _ivfpq_artifacts(spark, index_dir: str):
+    """``(meta, CB, cents)`` of a persisted IVF-PQ index: the ``meta/`` row
+    as a dict (None for indexes built before meta existed), the (m, ks,
+    dsub) codebook ndarray, and the centroid table as ``(cell_id, float64
+    vector)`` pairs sorted by cell_id — the list form ``assign_cells``
+    takes. All three are bounded by construction (1, m·ks and k rows), so
+    they live on the driver; the memo hands them back without a Spark job
+    until one of the three directories changes. URI-scheme paths and
+    indexes without meta/ bypass the memo (the fingerprint is a local-FS
+    stat walk over all three)."""
+    import numpy as np
+    from pyspark.errors import AnalysisException
+
+    keys = [_schema_cache_key(f"{index_dir}/{a}") for a in _SMALL_ARTIFACTS]
+    key = None if None in keys else (index_dir, "|".join(k[1] for k in keys))
+    hit = _memo_get(_ARTIFACT_MEMO, key) if key is not None else None
+    if hit is not None:
+        return hit
+    try:
+        mrow = read_parquet_cached(spark, f"{index_dir}/meta").first()
+        meta = mrow.asDict() if mrow is not None else None
+    except AnalysisException:  # built before meta/ existed
+        meta = None
+    CB = _collect_codebooks(read_parquet_cached(spark, f"{index_dir}/codebooks"))
+    CB.setflags(write=False)
+    cents = sorted(
+        ((r["cell_id"], np.asarray(r["cvec"], dtype="float64"))
+         for r in read_parquet_cached(spark, f"{index_dir}/centroids").collect()),
+        key=lambda c: c[0],
+    )
+    for _, v in cents:
+        v.setflags(write=False)
+    out = (meta, CB, cents)
+    if key is not None:
+        # an entry holds k·dim + m·ks·dsub doubles (~4 MB at 447 cells of
+        # 1024-dim vectors), so the memo keeps a few indexes, not 256
+        _memo_put(_ARTIFACT_MEMO, key, out, bound=16)
+    return out
+
+
 def append_to_ivfpq_index(
     spark,
     index_dir: str,
@@ -1852,26 +1900,19 @@ def append_to_ivfpq_index(
                 f"index (or audit the cell files and remove {marker}) "
                 f"before re-appending this batch"
             ) from None
-    cents = read_parquet_cached(spark, f"{index_dir}/centroids")
-    CB = _collect_codebooks(read_parquet_cached(spark, f"{index_dir}/codebooks"))
+    meta, CB, cents = _ivfpq_artifacts(spark, index_dir)
     # normalize the batch's vector element type to the index's persisted
     # vectors schema: parquet part files with mixed float/double elements
     # under one directory fail the vectorized reader at QUERY time
     # (SchemaColumnConvertNotSupportedException — found by the r11 drift
     # harness appending double batches into a float-built index).
-    # The type comes from meta/ (append-invariant, schema-memo stays warm
-    # across batches) when the build recorded it; indexes built before
-    # vec_type existed fall back to inferring the vectors/ schema, whose
-    # fingerprint moves on every append (r11 verdict ask #5: pass the
+    # The type comes from meta/ (append-invariant, so the artifact memo
+    # stays warm across batches) when the build recorded it; indexes built
+    # before vec_type existed fall back to inferring the vectors/ schema,
+    # whose fingerprint moves on every append (r11 verdict ask #5: pass the
     # known index schema through the append instead of re-inferring).
-    want = None
-    try:
-        mrow = read_parquet_cached(spark, f"{index_dir}/meta").first()
-        if mrow is not None and "vec_type" in mrow.asDict() and mrow["vec_type"]:
-            want = mrow["vec_type"]
-    except Exception:
-        want = None
-    if want is None:
+    want = (meta or {}).get("vec_type")
+    if not want:
         want = read_parquet_cached(spark, f"{index_dir}/vectors").schema[vec_col].dataType
     new_vectors = new_vectors.withColumn(vec_col, F.col(vec_col).cast(want))
     # materialize the batch-sized assignment once: it feeds BOTH the
@@ -1919,6 +1960,57 @@ def append_to_ivfpq_index(
             "skipped_existing_batch": False}
 
 
+def _fold_cosine(spark, Q, C):
+    """``cosine()`` for every (row of Q, row of C) pair, computed on the
+    driver with the expression's exact IEEE sequence: float→double
+    products, a left fold from 0.0 (cumsum is sequential, unlike numpy's
+    pairwise sum), sqrt, one product of the two norms, one divide. Spark's
+    divide yields NULL for a zero divisor (returned here as NaN under the
+    ``null`` mask) and raises DIVIDE_BY_ZERO under ANSI mode — replayed
+    here so the driver probe fails exactly where the Spark probe did."""
+    import numpy as np
+
+    def fold(P):
+        return np.cumsum(
+            np.concatenate([np.zeros(P.shape[:-1] + (1,)), P], axis=-1), axis=-1
+        )[..., -1]
+
+    cn = np.sqrt(fold(C * C))
+    den = np.sqrt(fold(Q * Q))[:, None] * cn[None, :]
+    dots = np.stack([fold(q * C) for q in Q])
+    null = den == 0
+    if null.any() and str(spark.conf.get("spark.sql.ansi.enabled")).lower() == "true":
+        from pyspark.errors import ArithmeticException
+
+        raise ArithmeticException(
+            message="[DIVIDE_BY_ZERO] Division by zero in the centroid probe: "
+            "a query or centroid vector has zero norm, so its cosine is undefined."
+        )
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(null, np.nan, dots / np.where(null, 1.0, den)), null
+
+
+def _spark_desc_order(group, score, null, tie):
+    """Row positions sorted as Spark sorts (group ASC, score DESC, tie ASC):
+    NaN above every number, NULL after every number, -0.0 equal to 0.0."""
+    import numpy as np
+
+    nan = np.isnan(score) & ~null
+    cls = np.where(nan, 0, np.where(null, 2, 1))
+    return np.lexsort((tie, -np.where(nan | null, 0.0, score), cls, group))
+
+
+def _head_per_group(group_sorted, n):
+    """Mask of the first ``n`` rows of each run of equal values in an
+    already-sorted group array, and every row's 1-based rank in its run."""
+    import numpy as np
+
+    pos = np.arange(len(group_sorted))
+    starts = np.r_[True, group_sorted[1:] != group_sorted[:-1]] if len(pos) else pos.astype(bool)
+    rank = pos - np.maximum.accumulate(np.where(starts, pos, 0)) + 1
+    return rank <= n, rank
+
+
 def ivfpq_query_index(
     spark,
     index_dir: str,
@@ -1930,40 +2022,47 @@ def ivfpq_query_index(
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Query a persisted IVF-PQ index: rank cells against the broadcast
-    centroid table, keep nprobe, ADC-score ONLY those cells' code
-    partitions (partition filters keep unprobed cells' files unread),
+    """Query a persisted IVF-PQ index: rank cells by centroid cosine, keep
+    nprobe, ADC-score ONLY those cells' code partitions (a literal
+    ``cell_id IN (...)`` filter keeps unprobed cells' files unread),
     shortlist, then re-rank exactly against the vectors table joined on
-    (cell_id, id) — still partition-pruned. Identical walk to the
-    self-contained ``ivfpq_topk`` built with the same parameters, so
-    results are bit-identical (pinned by pytest); with
-    nprobe == k_centroids and an unbounded shortlist it is exactly brute
-    force. ``shortlist=None`` applies the frozen 3·max(k, crowd) rule from
-    the crowd statistic the BUILD persisted in ``meta/`` (no code
-    re-aggregation at query time; indexes built before meta existed fall
-    back to one groupBy over codes); ``nprobe=None`` the measured
-    ceil(k/4) probe-fraction rule from the persisted meta (or centroid
-    count). Output: (query_id, neighbor_id, sim, rank)."""
+    (cell_id, id) — still partition-pruned. Identical results to the
+    self-contained ``ivfpq_topk`` built with the same parameters (pinned
+    by pytest); with nprobe == k_centroids and an unbounded shortlist it
+    is exactly brute force. ``shortlist=None`` applies the frozen
+    3·max(k, crowd) rule from the crowd statistic the BUILD persisted in
+    ``meta/`` (no code re-aggregation at query time; indexes built before
+    meta existed fall back to one groupBy over codes); ``nprobe=None`` the
+    measured ceil(k/4) probe-fraction rule from the persisted meta (or
+    centroid count). Output: (query_id, neighbor_id, sim, rank).
+
+    The small steps run on the driver, so a request costs four Spark jobs
+    (query collect, ADC scan, the re-rank and the broadcast of its local
+    table) plus schema inference of codes/ and vectors/ when an append
+    moved them. ``queries`` is evaluated exactly ONCE
+    (``limit(MAX_QUERY_ROWS + 1)`` to Arrow); meta/, codebooks and
+    centroids come from the driver-held artifact memo; the probe replays
+    ``cosine()`` on the collected centroids (``_fold_cosine``); the one
+    ``mapInPandas`` ADC scan over the probed code partitions is collected
+    and the global shortlist is taken on the driver; the exact re-rank
+    stays the Spark expression ``F.round(cosine(__qv, vec), 4)`` over a
+    broadcast local table of shortlisted rows; the final top-k is ranked
+    on the driver. Unlike the other walks here, the Spark work is DONE
+    when this returns: the result is a local table. Query ids must be
+    unique."""
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
-    cents = read_parquet_cached(spark, f"{index_dir}/centroids")
-    meta_row = None
-    if nprobe is None or shortlist is None:
-        try:  # read the 1-row meta ONCE for both auto knobs
-            meta_row = read_parquet_cached(spark, f"{index_dir}/meta").first()
-        except Exception:
-            meta_row = None
+    meta, CB, cents = _ivfpq_artifacts(spark, index_dir)
     if nprobe is None:
-        nprobe = _auto_nprobe(
-            int(meta_row["k_centroids"]) if meta_row is not None else cents.count()
-        )
-    CB = _collect_codebooks(read_parquet_cached(spark, f"{index_dir}/codebooks"))
+        nprobe = _auto_nprobe(int(meta["k_centroids"]) if meta is not None else len(cents))
     m, _, dsub = CB.shape
     codes = read_parquet_cached(spark, f"{index_dir}/codes")
     if shortlist is None:
-        if meta_row is not None and "adc_crowd" in meta_row:
-            crowd = int(meta_row["adc_crowd"])
+        if meta is not None and "adc_crowd" in meta:
+            crowd = int(meta["adc_crowd"])
         else:
             # index built before meta existed: measure from the persisted
             # vectors + codes (one bounded pass, same walk as the build)
@@ -1973,50 +2072,50 @@ def ivfpq_query_index(
             )
         shortlist = _auto_shortlist(k, crowd)
 
-    qrows = queries.select(F.col(query_id), F.col(vec_col)).limit(MAX_QUERY_ROWS + 1).collect()
-    if len(qrows) > MAX_QUERY_ROWS:
+    qtab = queries.select(F.col(query_id), F.col(vec_col)).limit(MAX_QUERY_ROWS + 1).toArrow()
+    if qtab.num_rows > MAX_QUERY_ROWS:
         raise ValueError(
             f"ivfpq_query_index: the query side is collected and broadcast in "
             f"the UDF closure, but it has > MAX_QUERY_ROWS={MAX_QUERY_ROWS} rows."
         )
-    if not qrows:
+    if qtab.num_rows == 0:
         empty = spark.createDataFrame([], f"{query_id} long, neighbor_id long, sim double")
         return empty.withColumn("rank", F.lit(1)).limit(0)
-    qindex = {r[0]: i for i, r in enumerate(qrows)}
-    Q = np.stack([np.asarray(r[1], dtype="float64") for r in qrows])
+    qids = np.asarray(qtab.column(query_id).to_pylist(), dtype="int64")
+    if len(np.unique(qids)) < len(qids):
+        raise ValueError(f"ivfpq_query_index: duplicate {query_id} values in the query side")
+    Q = np.stack([np.asarray(v, dtype="float64") for v in qtab.column(vec_col).to_pylist()])
     LUT = np.stack(
         [Q[:, j * dsub : (j + 1) * dsub] @ CB[j].T for j in range(m)], axis=1
     )
 
-    qprobe = (
-        queries.select(F.col(query_id), F.col(vec_col).alias("qv"))
-        .crossJoin(F.broadcast(cents))
-        .select(query_id, "cell_id", cosine(F.col("qv"), F.col("cvec")).alias("csim"))
-    )
-    wq = Window.partitionBy(query_id).orderBy(F.desc("csim"), F.asc("cell_id"))
-    qcells = (
-        qprobe.withColumn("__pr", F.row_number().over(wq))
-        .filter(F.col("__pr") <= nprobe)
-        .select(query_id, "cell_id")
-    )
-    joined = F.broadcast(qcells).join(codes, "cell_id").select(
-        query_id, "cell_id", F.col(corpus_id), "codes"
-    )
+    # driver probe: (csim DESC, cell_id ASC) per query, first nprobe cells
+    cell_ids = np.array([c for c, _ in cents], dtype="int64")
+    csim, null = _fold_cosine(spark, Q, np.stack([v for _, v in cents]))
+    nq, nk = csim.shape
+    qrow = np.repeat(np.arange(nq), nk)
+    order = _spark_desc_order(qrow, csim.ravel(), null.ravel(), np.tile(cell_ids, nq))
+    keep, _ = _head_per_group(qrow[order], nprobe)
+    probe = np.zeros(nq * nk, dtype=bool)
+    probe[order[keep]] = True
+    probe = probe.reshape(nq, nk)
+    probed = [int(c) for c in cell_ids[probe.any(axis=0)]]
     take = shortlist + 1
 
     def score(batches):
         for pdf in batches:
             if pdf.empty:
                 continue
-            qidx = np.array([qindex[q] for q in pdf[query_id]])
-            ids = pdf[corpus_id].to_numpy()
-            Cd = np.stack([np.asarray(c, dtype="int64") for c in pdf["codes"]])
-            s = LUT[qidx, 0, Cd[:, 0]]
+            cells = pdf["cell_id"].to_numpy()
+            qi, ri = np.nonzero(probe[:, np.searchsorted(cell_ids, cells)])  # (query, row) pairs
+            ids = pdf[corpus_id].to_numpy()[ri]
+            Cd = np.stack([np.asarray(c, dtype="int64") for c in pdf["codes"]])[ri]
+            s = LUT[qi, 0, Cd[:, 0]]
             for j in range(1, m):
-                s = s + LUT[qidx, j, Cd[:, j]]
-            s[pdf[query_id].to_numpy() == ids] = -np.inf
+                s = s + LUT[qi, j, Cd[:, j]]
+            s[qids[qi] == ids] = -np.inf
             out = pd.DataFrame(
-                {query_id: pdf[query_id], "cell_id": pdf["cell_id"], corpus_id: ids, "approx": s}
+                {query_id: qids[qi], "cell_id": cells[ri], corpus_id: ids, "approx": s}
             )
             out = out[np.isfinite(out["approx"])]
             out = out.sort_values(
@@ -2024,26 +2123,52 @@ def ivfpq_query_index(
             ).groupby(query_id, sort=False).head(take)
             yield out
 
-    cands = joined.mapInPandas(
-        score, f"{query_id} long, cell_id int, {corpus_id} long, approx double"
+    cands = (
+        codes.filter(F.col("cell_id").isin(probed))
+        .select("cell_id", corpus_id, "codes")
+        .mapInPandas(score, f"{query_id} long, cell_id int, {corpus_id} long, approx double")
+        .toArrow()
     )
-    ws = Window.partitionBy(query_id).orderBy(F.desc("approx"), F.asc(corpus_id))
-    short = (
-        cands.withColumn("__sr", F.row_number().over(ws))
-        .filter(F.col("__sr") <= shortlist)
-        .select(query_id, "cell_id", corpus_id)
+    cq = cands.column(query_id).to_numpy()
+    approx = cands.column("approx").to_numpy()
+    order = _spark_desc_order(
+        cq, approx, np.zeros(len(cq), dtype=bool), cands.column(corpus_id).to_numpy()
     )
-    qdf = queries.select(F.col(query_id), F.col(vec_col).alias("__qv"))
-    vectors = read_parquet_cached(spark, f"{index_dir}/vectors")
+    keep, _ = _head_per_group(cq[order], shortlist)
+    short = cands.take(pa.array(order[keep])).drop_columns(["approx"])
+    qpos = {q: i for i, q in enumerate(qids.tolist())}
+    short = short.append_column(
+        "__qv",
+        qtab.column(vec_col).take(
+            pa.array([qpos[q] for q in short.column(query_id).to_pylist()], pa.int64())
+        ),
+    )
     rerank = (
-        vectors.join(
-            F.broadcast(short.join(F.broadcast(qdf), query_id)), ["cell_id", corpus_id]
-        )
+        read_parquet_cached(spark, f"{index_dir}/vectors")
+        .filter(F.col("cell_id").isin(sorted({int(c) for c in short.column("cell_id").to_pylist()})))
+        .join(F.broadcast(spark.createDataFrame(short)), ["cell_id", corpus_id])
         .select(
             query_id,
             F.col(corpus_id).alias("neighbor_id"),
             F.round(cosine(F.col("__qv"), F.col(vec_col)), 4).alias("sim"),
         )
     )
-    wk = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return rerank.withColumn("rank", F.row_number().over(wk)).filter(F.col("rank") <= k)
+    # collect, not toArrow: with the broadcast local table toArrow runs
+    # one more job for the same rows
+    rows = rerank.collect()
+    rq = np.array([r[0] for r in rows], dtype="int64")
+    nids = np.array([r[1] for r in rows], dtype="int64")
+    sims = [r[2] for r in rows]
+    null = np.array([v is None for v in sims], dtype=bool)
+    order = _spark_desc_order(
+        rq, np.array([np.nan if v is None else v for v in sims], dtype="float64"), null, nids
+    )
+    keep, rank = _head_per_group(rq[order], k)
+    pos = order[keep]
+    nid_type = to_arrow_type(rerank.schema["neighbor_id"].dataType)
+    return spark.createDataFrame(pa.table({
+        query_id: pa.array(rq[pos], pa.int64()),
+        "neighbor_id": pa.array(nids[pos], nid_type),
+        "sim": pa.array([sims[i] for i in pos], pa.float64()),
+        "rank": pa.array(rank[keep], pa.int32()),
+    }))

@@ -25,7 +25,6 @@ from pyspark.sql import types as T
 
 from nextgenetl_spark.functions.text import normalize_value as normalize_value_expr
 from nextgenetl_spark.inference import (
-    BQ_TO_SPARK,
     dedupe_headers,
     infer_tsv_types,
     make_name_bq_friendly,
@@ -232,9 +231,3 @@ def read_tsv(
             c = c.cast(_CAST[types[h]])
         cols.append(c.alias(h))
     return df.select(*cols)
-
-
-def schema_from_types(types: dict[str, str]) -> T.StructType:
-    """BQ-vocabulary type dict → StructType (for persisting inferred schemas
-    the way the reference serializes schema JSON to GCS)."""
-    return T.StructType([T.StructField(h, BQ_TO_SPARK[t], True) for h, t in types.items()])

@@ -339,3 +339,47 @@ def test_schema_cache_bypasses_remote_and_bounds_per_path(spark, tmp_path):
     assert ("/p/x", "fp1") not in cat._SCHEMA_CACHE  # stale evicted
     assert cat._SCHEMA_CACHE[("/p/x", "fp2")] == s2
     assert ("/p/hot", "fph") in cat._SCHEMA_CACHE   # hot entry survives
+
+
+def test_schema_memo_evicts_least_recently_used(spark, tmp_path):
+    """The memo bound evicts the least recently USED entry: ten hot tables
+    that are hit through load() and read_parquet_cached while 256 one-off
+    paths stream in must survive. Insertion-order eviction dropped them
+    first, because they were inserted first."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from nextgenetl_spark import catalog as cat
+
+    lake = tmp_path / "lake"
+    lake.mkdir()
+    for i in range(10):
+        pq.write_table(pa.table({"a": pa.array([i], pa.int64())}), str(lake / f"t{i}.parquet"))
+
+    def hit_all():
+        for i in range(10):
+            if i % 2:
+                cat.load(spark, str(lake), f"t{i}")
+            else:
+                cat.read_parquet_cached(spark, str(lake / f"t{i}.parquet"))
+
+    cat._SCHEMA_CACHE.clear()
+    hit_all()  # first reads: infer and insert
+    hot = set(cat._SCHEMA_CACHE)
+    assert len(hot) == 10
+    cold = T.StructType([T.StructField("b", T.LongType())])
+    for j in range(256):
+        cat._schema_cache_put((f"/cold/{j}", "fp"), cold)
+        if j == 127:
+            hit_all()
+    assert hot <= set(cat._SCHEMA_CACHE)
+    assert len(cat._SCHEMA_CACHE) == 256
+
+
+def test_parquet_ts_unit_remote_path_is_none():
+    """The footer probe reads the local filesystem only: a URI-scheme path
+    reports no timestamp unit instead of raising ArrowInvalid."""
+    from nextgenetl_spark import catalog as cat
+
+    assert cat._parquet_ts_unit("s3a://bucket/t.parquet") is None

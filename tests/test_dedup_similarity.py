@@ -1580,6 +1580,128 @@ def test_ivfpq_index_persist_matches_self_contained_and_brute(spark, tmp_path):
         ivfpq_query_index(spark, str(tmp_path / "idx"), q, nprobe=1, shortlist=10, k=3)
     )
 
+    # The query path probes cells on the driver by replaying cosine(); pin
+    # it against the Spark probe of ivfpq_topk on the two edge cases of the
+    # (csim DESC, cell_id ASC) order. The two first centroids by
+    # (xxhash64(id), id) are identical vectors — an exact csim tie that
+    # only the cell_id tie-break decides, and the higher cell is empty
+    # (assignment takes the first maximum), so a wrong pick drops rows.
+    # A zero-norm query makes every csim 0/0: Spark's divide raises
+    # DIVIDE_BY_ZERO under ANSI mode and yields NULL (ranked last) without.
+    import pytest
+    from pyspark.errors import ArithmeticException
+
+    seeds = [
+        r[0]
+        for r in spark.range(n)
+        .orderBy(F.xxhash64(F.col("id").cast("string")), "id")
+        .limit(6)
+        .collect()
+    ]
+    tie = dict(vecs)
+    tie[seeds[1]] = list(tie[seeds[0]])
+    tie[seeds[5]] = [0.0] * dim  # not a centroid: k_centroids=4
+    emb_t = spark.createDataFrame(sorted(tie.items()), "vec_id long, embedding array<double>")
+    c_t = emb_t.select(F.col("vec_id").alias("neighbor_id"), "embedding")
+    idx_t = str(tmp_path / "idx_tie")
+    build_ivfpq_index(emb_t, idx_t, k_centroids=4, refine_iters=0, m=3, ks=4, train_iters=1)
+    others = [i for i in range(n) if i not in seeds][:2]
+    q_tie = emb_t.filter(F.col("vec_id").isin(seeds[:4] + others)).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    q_zero = emb_t.filter(F.col("vec_id").isin(seeds[:2] + [seeds[5]])).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+
+    def both(qdf, nprobe):
+        return (
+            rows(ivfpq_query_index(spark, idx_t, qdf, nprobe=nprobe, shortlist=10, k=3)),
+            rows(
+                ivfpq_topk(
+                    qdf, c_t, k_centroids=4, nprobe=nprobe, m=3, ks=4, k=3,
+                    shortlist=10, refine_iters=0, train_iters=1,
+                )
+            ),
+        )
+
+    for nprobe in (1, 2):
+        got, want = both(q_tie, nprobe)
+        assert got == want
+        assert {seeds[0], seeds[1]} <= {r[0] for r in got}
+    for fn in (
+        lambda: ivfpq_query_index(spark, idx_t, q_zero, nprobe=2, shortlist=10, k=3).collect(),
+        lambda: ivfpq_topk(
+            q_zero, c_t, k_centroids=4, nprobe=2, m=3, ks=4, k=3,
+            shortlist=10, refine_iters=0, train_iters=1,
+        ).collect(),
+    ):
+        with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+            fn()
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        got, want = both(q_zero, 2)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert got == want
+    assert [r[2] for r in got if r[0] == seeds[5]] == [None] * 3
+
+
+def test_ivfpq_query_index_evaluates_queries_once(spark, tmp_path):
+    """ivfpq_query_index evaluates the query frame exactly once. A frame
+    whose rows change between evaluations (ids drawn by a nondeterministic
+    UDF) used to be collected for the lookup tables and then re-evaluated
+    by the probe and the re-rank, so the scorer met ids it had no table
+    for (KeyError) or queries went missing. The result must cover exactly
+    the one set of drawn rows, with brute-force cosines. Query ids must be
+    unique: the walk keys the probe and the re-rank on them."""
+    import random
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from nextgenetl_spark.operators.similarity import (
+        build_ivfpq_index,
+        cosine_topk_gemm,
+        ivfpq_query_index,
+    )
+
+    rng = random.Random(7)
+    dim, n = 8, 60
+    emb = spark.createDataFrame(
+        [(i, [rng.gauss(0, 1) for _ in range(dim)]) for i in range(n)],
+        "vec_id long, embedding array<double>",
+    )
+    idx = str(tmp_path / "idx")
+    build_ivfpq_index(emb, idx, k_centroids=4, refine_iters=0, m=2, ks=4, train_iters=1)
+    draw = F.udf(lambda: random.sample(range(n), 3), "array<long>").asNondeterministic()
+    q = (
+        spark.range(1)
+        .select(F.explode(draw()).alias("query_id"))
+        .join(emb.withColumnRenamed("vec_id", "query_id"), "query_id")
+    )
+    got = sorted(
+        tuple(r)
+        for r in ivfpq_query_index(spark, idx, q, nprobe=4, shortlist=10**9, k=3)
+        .select("query_id", "neighbor_id", "sim", "rank")
+        .collect()
+    )
+    drawn = sorted({r[0] for r in got})
+    assert len(drawn) == 3 and len(got) == 9
+    fixed = emb.filter(F.col("vec_id").isin(drawn)).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    c = emb.select(F.col("vec_id").alias("neighbor_id"), "embedding")
+    want = sorted(
+        tuple(r)
+        for r in cosine_topk_gemm(fixed, c, k=3)
+        .select("query_id", "neighbor_id", "sim", "rank")
+        .collect()
+    )
+    assert got == want
+    with pytest.raises(ValueError, match="duplicate query_id"):
+        ivfpq_query_index(spark, idx, fixed.union(fixed), nprobe=4, shortlist=10, k=3)
+
 
 def test_ivf_auto_nprobe_matches_quarter_fraction(spark):
     """nprobe=None == explicit ceil(k_centroids/4) on ivf_topk, and the
@@ -1791,6 +1913,7 @@ def test_ivfpq_append_matches_frozen_encode(spark, tmp_path):
 
     from nextgenetl_spark.operators.similarity import (
         _collect_codebooks,
+        _ivfpq_artifacts,
         append_to_ivfpq_index,
         assign_cells,
         build_ivfpq_index,
@@ -1810,7 +1933,11 @@ def test_ivfpq_append_matches_frozen_encode(spark, tmp_path):
     idx = str(tmp_path / "idx")
     build_ivfpq_index(hist, idx, k_centroids=6, refine_iters=1, m=3, ks=4, train_iters=1)
     n_hist_codes = spark.read.parquet(f"{idx}/codes").count()
+    arts = _ivfpq_artifacts(spark, idx)
     append_to_ivfpq_index(spark, idx, batch)
+    # the append leaves meta/, codebooks and centroids alone, so the
+    # driver-held artifacts stay memoized for the next request
+    assert _ivfpq_artifacts(spark, idx) is arts
 
     # frozen-artifact equivalence: re-derive the batch's rows by hand
     cents = spark.read.parquet(f"{idx}/centroids")
@@ -1849,6 +1976,14 @@ def test_ivfpq_append_matches_frozen_encode(spark, tmp_path):
         )
     )
     assert got_q == brute
+
+    # a rewrite of any small artifact moves its fingerprint: a new read
+    import glob
+    import os
+
+    part = sorted(glob.glob(f"{idx}/centroids/*.parquet"))[0]
+    os.utime(part, ns=(0, os.stat(part).st_mtime_ns + 1_000_000))
+    assert _ivfpq_artifacts(spark, idx) is not arts
 
 
 def test_ivfpq_append_batch_id_idempotent(spark, tmp_path):

@@ -40,10 +40,11 @@ EXPECTED = {
     # crossJoin (ann_ivfpq_topk shape) + the 1-row (avgdl, N) BM25 stats
     # broadcast (bm25_topk shape) — both constant-size NLJs
     "hybrid_rrf_production": {"BroadcastNestedLoopJoin"},
+    # persisted-index hybrid: only the BM25 leg's 1-row (avgdl, N) stats
+    # broadcast is left. The persisted query path (ivfpq_query_index, also
+    # behind ann_ivfpq_append and stream_ivfpq_ingest) probes centroids on
+    # the driver and returns a local table, so it plans no NLJ
     "hybrid_rrf_persisted": {"BroadcastNestedLoopJoin"},
-    # persisted-index query path: k-row centroid-probe crossJoin
-    "ann_ivfpq_append": {"BroadcastNestedLoopJoin"},
-    "stream_ivfpq_ingest": {"BroadcastNestedLoopJoin"},
     # the pairwise type_a < type_b join runs over the 5-row SKETCH table
     # (n_types² pairs of ≤k-long lists) — constant-size NLJ by design
     "kmv_set_overlap": {"BroadcastNestedLoopJoin"},
