@@ -11,9 +11,10 @@ Reference sources:
 - NaN-tolerant new-data check            cda_bq_etl/bq_helpers/lookup.py:650-698
 - release-over-release schema/key report build_gdc_api_clinical_program_tables.py:1217-1363
 
-Scale notes: every compare is expressed as distinct/subtract/anti-join —
-hash shuffles on the compared columns only; nothing collects except final
-(small) diff samples and scalar verdicts.
+Scale notes: every compare is expressed as group-by/anti-join/outer join —
+hash shuffles on the compared columns only (a full-table compare is one
+group-by over both sides' tagged rows, see setops.symmetric_diff); nothing
+collects except final (small) diff samples and scalar verdicts.
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nextgenetl_spark.operators.setops import except_distinct, symmetric_diff
+from nextgenetl_spark.operators.setops import symmetric_diff
 
 
 def row_count_compare(old: DataFrame, new: DataFrame) -> dict:
@@ -76,12 +77,14 @@ def _nan_safe(df: DataFrame) -> DataFrame:
 def tables_equal(old: DataFrame, new: DataFrame, nan_tolerant: bool = True) -> bool:
     """The publish gate: True when the symmetric EXCEPT DISTINCT diff is
     empty both ways (reference: support.py:2072-2123 compare_two_tables →
-    skip republish when identical)."""
+    skip republish when identical). ``new``'s columns are selected by name
+    in ``old``'s order; the compare is one shuffle (setops.symmetric_diff)
+    and reads back at most one row."""
     if sorted(old.columns) != sorted(new.columns):
         return False
     o = _nan_safe(old) if nan_tolerant else old
     n = _nan_safe(new.select(*old.columns)) if nan_tolerant else new.select(*old.columns)
-    return symmetric_diff(o, n).limit(1).count() == 0
+    return symmetric_diff(o, n).isEmpty()
 
 
 def full_table_diff(old: DataFrame, new: DataFrame, nan_tolerant: bool = True) -> DataFrame:
@@ -97,28 +100,25 @@ def release_report(old: DataFrame, new: DataFrame, key: str) -> dict:
     part via INFORMATION_SCHEMA — here the DataFrame schema IS the catalog)."""
     old_fields = {f.name: f.dataType.simpleString() for f in old.schema.fields}
     new_fields = {f.name: f.dataType.simpleString() for f in new.schema.fields}
-    # One full-outer key join + one unioned count: 2 jobs total where the
-    # compositional form (key_diff counts + row_count_compare) pays 4 —
-    # at warehouse scale each job is a full scan, so halving passes matters.
-    o = old.select(F.col(key).alias("__k")).distinct().withColumn("__o", F.lit(1))
-    n = new.select(F.col(key).alias("__k")).distinct().withColumn("__n", F.lit(1))
+    # One action: per-side row counts per key, a full-outer join on the
+    # key, one aggregate. The compositional form (key_diff counts +
+    # row_count_compare) pays four, and at warehouse scale each is a full
+    # scan. NULL keys never match in the join, so a NULL key counts once as
+    # removed if old holds it and once as added if new does; the row counts
+    # include every row.
+    o = old.groupBy(F.col(key).alias("__k")).agg(F.count(F.lit(1)).alias("__o"))
+    n = new.groupBy(F.col(key).alias("__k")).agg(F.count(F.lit(1)).alias("__n"))
     krow = (
         o.join(n, "__k", "full_outer")
         .agg(
             F.count(F.when(F.col("__o").isNull(), 1)).alias("added"),
             F.count(F.when(F.col("__n").isNull(), 1)).alias("removed"),
+            F.coalesce(F.sum("__o"), F.lit(0)).alias("old"),
+            F.coalesce(F.sum("__n"), F.lit(0)).alias("new"),
         )
         .first()
     )
-    rc = {
-        r["__side"]: r["cnt"]
-        for r in old.select(F.lit("old").alias("__side"))
-        .unionByName(new.select(F.lit("new").alias("__side")))
-        .groupBy("__side")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    rc = {"old": rc.get("old", 0), "new": rc.get("new", 0)}
+    rc = {"old": krow["old"], "new": krow["new"]}
     return {
         "added_fields": sorted(set(new_fields) - set(old_fields)),
         "removed_fields": sorted(set(old_fields) - set(new_fields)),

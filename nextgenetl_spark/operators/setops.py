@@ -52,7 +52,26 @@ def union_by_name_padded(dfs: Iterable[DataFrame], provenance: list[str] | None 
 def symmetric_diff(a: DataFrame, b: DataFrame) -> DataFrame:
     """Full-table symmetric ``EXCEPT DISTINCT`` diff, tagged by side
     (reference: common_etl/support.py:2090-2123 — the publish gate that
-    decides whether a new release differs from the old)."""
-    only_a = except_distinct(a, b).withColumn("diff_side", F.lit("old"))
-    only_b = except_distinct(b, a).withColumn("diff_side", F.lit("new"))
-    return only_a.unionByName(only_b)
+    decides whether a new release differs from the old).
+
+    One shuffle: each side's rows are tagged, unioned positionally (so column
+    types widen as EXCEPT widens them) and grouped on every column; a group
+    whose rows all carry one side's tag is a row of that side's EXCEPT
+    DISTINCT, ``diff_side`` ``old`` (only in ``a``) or ``new`` (only in
+    ``b``). Grouping, like EXCEPT, treats NULLs as equal and normalizes NaN
+    and -0.0, so the rows are exactly those of
+    ``except_distinct(a, b) ∪ except_distinct(b, a)``. Columns are matched
+    by position and named after ``a``'s."""
+    pos = [f"_{i}" for i in range(len(a.columns))]
+    tagged = a.toDF(*pos).withColumn("__side", F.lit(0)).union(
+        b.toDF(*pos).withColumn("__side", F.lit(1))
+    )
+    return (
+        tagged.groupBy(*pos)
+        .agg(F.min("__side").alias("__lo"), F.max("__side").alias("__hi"))
+        .filter(F.col("__lo") == F.col("__hi"))
+        .select(
+            *(F.col(p).alias(c) for p, c in zip(pos, a.columns)),
+            F.when(F.col("__lo") == 0, "old").otherwise("new").alias("diff_side"),
+        )
+    )

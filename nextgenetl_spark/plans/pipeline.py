@@ -12,7 +12,14 @@ Spark design:
   stays declarative; python-builder steps are registered callables.
 - steps are LAZY by default: a chain of non-materialized steps fuses into
   one Catalyst plan (the reference pays a BigQuery round-trip per step;
-  we only pay at materialization points).
+  we only pay at materialization points). ``run`` also DEFERS a lazy step
+  until something consumes it: the step is built only if a later selected
+  step is built (a materialized step that is not fresh, an export, or a
+  lazy step that is built) or if no materialized step follows it. The lazy
+  chain in front of a fresh ``skip_if_fresh`` tail therefore costs nothing
+  on a re-run — not even the CMS scan an auto-salted join makes while its
+  plan is built. A deferred step stays on the Pipeline and is built on
+  demand by ``table(name)`` or by the next step that is built.
 - ``materialize: true`` writes parquet and re-reads it — the reference's
   per-step WRITE_TRUNCATE semantics, kept for resumability/inspection and
   as an explicit shuffle barrier when a step's output is reused by several
@@ -23,12 +30,15 @@ from __future__ import annotations
 
 import os
 import re
+import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 import yaml
 
 from pyspark.sql import DataFrame, SparkSession
+
+from nextgenetl_spark.catalog import read_parquet_cached
 
 _PARAM_RE = re.compile(r"\{([A-Za-z_][A-Za-z0-9_]*)\}")
 
@@ -62,7 +72,18 @@ class Pipeline:
 
     Tables live in a name → DataFrame dict mirrored as temp views; a step is
     {'name', 'dest', and one of 'sql' | 'builder'}, plus optional
-    'materialize': bool and 'mode': overwrite|append.
+    'materialize': bool and 'mode': overwrite|append. ``tables`` holds
+    built outputs only; a step that ``run`` deferred resolves through
+    ``table(name)``, which builds it.
+
+    ``step_log`` gets one record per step ``run`` selects or ``run_step`` is
+    given, and one per deferred step built later on demand:
+    ``{'name', 'dest', 'outcome', 'wall_s'}`` with
+    outcome ``computed`` (built now), ``fresh`` (a skip_if_fresh output read
+    back) or ``deferred`` (a lazy step nothing built consumes yet), plus
+    ``skew_decision`` when an auto-salted join made one. Recording runs no
+    job, so the records carry no row counts; ``wall_s`` of a lazy step is
+    its plan-building time, of a materialized one its build and write.
     """
 
     spark: SparkSession
@@ -71,6 +92,9 @@ class Pipeline:
     builders: dict = field(default_factory=dict)  # name -> Callable[[Pipeline, dict], DataFrame]
     tables: dict = field(default_factory=dict)
     skew_decisions: dict = field(default_factory=dict)  # step name -> auto-salt record
+    step_log: list = field(default_factory=list)
+    # dest -> lazy step deferred by run(), in config order
+    _deferred: dict = field(default_factory=dict, init=False, repr=False)
 
     def register(self, name: str, df: DataFrame) -> None:
         self.tables[name] = df
@@ -80,9 +104,22 @@ class Pipeline:
         self.builders[name] = fn
 
     def table(self, name: str) -> DataFrame:
+        if name in self._deferred:
+            self._build_deferred(upto=name)
         if name not in self.tables:
             raise KeyError(f"unknown table '{name}' (known: {sorted(self.tables)})")
         return self.tables[name]
+
+    def _build_deferred(self, upto: str | None = None) -> None:
+        """Build deferred steps in config order — all of them, or those up
+        to and including ``upto``. Every earlier deferred step is built too,
+        because a step's SQL may read any earlier step's view."""
+        while self._deferred:
+            dest = next(iter(self._deferred))
+            step = self._deferred.pop(dest)
+            self._run(step, self._render(step), None)
+            if dest == upto:
+                return
 
     def _step_fingerprint(self, step: dict, rendered_sql: str | None) -> str:
         """Definition fingerprint of a step: the rendered SQL (param values
@@ -98,30 +135,67 @@ class Pipeline:
             basis["sql"] = rendered_sql
         return hashlib.md5(json.dumps(basis, sort_keys=True, default=str).encode()).hexdigest()
 
+    def _render(self, step: dict) -> str | None:
+        if "sql" not in step:
+            return None
+        return render_sql(step["sql"], self.params) if step.get("format", True) else step["sql"]
+
+    def _fresh_path(self, step: dict, rendered: str | None) -> str | None:
+        """The step's materialized output dir when skip_if_fresh applies and
+        its recorded definition fingerprint matches this step, else None.
+        Incremental resume: the automatic form of the reference's
+        resume-by-steps-list (reference re-runs are manual step subsets;
+        here freshness is checked per step)."""
+        import json
+
+        if not step.get("skip_if_fresh"):
+            return None
+        if not (step.get("materialize") and self.warehouse):
+            name = step.get("name", step.get("dest", "<unnamed>"))
+            raise ValueError(f"step '{name}': skip_if_fresh requires materialize + warehouse")
+        path = os.path.join(self.warehouse, step["dest"])
+        sidecar = os.path.join(path, "_step_fingerprint.json")
+        if not (os.path.exists(os.path.join(path, "_SUCCESS")) and os.path.exists(sidecar)):
+            return None
+        with open(sidecar, encoding="utf-8") as fh:
+            recorded = json.load(fh).get("fingerprint")
+        return path if recorded == self._step_fingerprint(step, rendered) else None
+
     def run_step(self, step: dict) -> DataFrame:
+        """Build one step now, or read its output back when it is fresh.
+        Steps an earlier ``run`` deferred are built first (one with this
+        step's dest is superseded instead): this step may read any of them."""
+        rendered = self._render(step)
+        fresh = self._fresh_path(step, rendered)
+        self._deferred.pop(step["dest"], None)
+        if fresh is None:
+            self._build_deferred()
+        return self._run(step, rendered, fresh)
+
+    def _run(self, step: dict, rendered: str | None, fresh: str | None) -> DataFrame:
+        t0 = time.perf_counter()
+        if fresh is not None:
+            # the unchanged output's schema comes from the memo: no
+            # inference job on a re-run
+            df = read_parquet_cached(self.spark, fresh)
+            self.register(step["dest"], df)
+        else:
+            df = self._compute(step, rendered)
+        record = {"outcome": "computed" if fresh is None else "fresh", "wall_s": time.perf_counter() - t0}
+        spec = step.get("salted_join")
+        if fresh is None and isinstance(spec, dict) and spec.get("auto"):
+            record["skew_decision"] = self.skew_decisions.get(step.get("name", step["dest"]))
+        self._log(step, **record)
+        return df
+
+    def _log(self, step: dict, **record) -> None:
+        self.step_log.append({"name": step.get("name", step["dest"]), "dest": step["dest"], **record})
+
+    def _compute(self, step: dict, rendered: str | None) -> DataFrame:
         import json
 
         name = step.get("name", step.get("dest", "<unnamed>"))
         dest = step["dest"]
-        rendered = None
-        if "sql" in step:
-            rendered = render_sql(step["sql"], self.params) if step.get("format", True) else step["sql"]
-        if step.get("skip_if_fresh"):
-            # Incremental resume: reuse a materialized output whose recorded
-            # definition fingerprint matches this step — the automatic form
-            # of the reference's resume-by-steps-list (reference re-runs are
-            # manual step subsets; here freshness is checked per step).
-            if not (step.get("materialize") and self.warehouse):
-                raise ValueError(f"step '{name}': skip_if_fresh requires materialize + warehouse")
-            path = os.path.join(self.warehouse, dest)
-            sidecar = os.path.join(path, "_step_fingerprint.json")
-            if os.path.exists(os.path.join(path, "_SUCCESS")) and os.path.exists(sidecar):
-                with open(sidecar, encoding="utf-8") as fh:
-                    recorded = json.load(fh).get("fingerprint")
-                if recorded == self._step_fingerprint(step, rendered):
-                    df = self.spark.read.parquet(path)
-                    self.register(dest, df)
-                    return df
         if "sql" in step:
             df = self.spark.sql(rendered)
         elif "builder" in step:
@@ -263,13 +337,34 @@ class Pipeline:
     def run(self, config: dict, steps: list | None = None) -> dict:
         """Run the configured steps (optionally a named subset, preserving
         config order — the reference's resume-by-steps-list). Returns the
-        name → DataFrame map of step outputs."""
+        name → DataFrame map of the outputs of every step not deferred.
+
+        A lazy step is deferred unless a later selected step is built or no
+        materialized step follows it (module docstring); the steps that are
+        built still run in config order."""
         self.params = {**config.get("params", {}), **self.params}
         selected = steps if steps is not None else config.get("run_steps")
+        chosen = [
+            s for s in config["steps"]
+            if selected is None or s.get("name", s.get("dest")) in selected
+        ]
+        # decide back to front; a fresh materialized step is read back and
+        # a lazy step that is not built is deferred
+        needed, later_built, barrier_follows = [], False, False
+        for step in reversed(chosen):
+            if step.get("materialize") or step.get("export_jsonl") or step.get("export_csv"):
+                build = self._fresh_path(step, self._render(step)) is None
+                barrier_follows = True
+            else:
+                build = later_built or not barrier_follows
+            later_built |= build
+            needed.append(build or step.get("materialize"))
         out = {}
-        for step in config["steps"]:
-            name = step.get("name", step.get("dest"))
-            if selected is not None and name not in selected:
-                continue
-            out[step["dest"]] = self.run_step(step)
+        for step, need in zip(chosen, reversed(needed)):
+            if need:
+                out[step["dest"]] = self.run_step(step)
+            else:
+                self._deferred[step["dest"]] = step
+                self.tables.pop(step["dest"], None)
+                self._log(step, outcome="deferred", wall_s=0.0)
         return out

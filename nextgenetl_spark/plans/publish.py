@@ -20,6 +20,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from nextgenetl_spark.catalog import read_parquet_cached
 from nextgenetl_spark.diff import tables_equal
 
 #: Sidecar filename for table metadata. The leading underscore makes Spark's
@@ -143,7 +144,8 @@ def publish_table(
     (common_etl/utils.py:134-298,368-382)."""
     prev = find_most_recent_release(root, table)
     if prev is not None:
-        prev_df = spark.read.parquet(os.path.join(_versioned_dir(root, table), prev))
+        # an unchanged previous release reads its schema from the memo
+        prev_df = read_parquet_cached(spark, os.path.join(_versioned_dir(root, table), prev))
         if sorted(prev_df.columns) == sorted(df.columns) and tables_equal(prev_df, df, nan_tolerant):
             return {"published": False, "reason": "identical to previous release", "previous_release": prev}
 

@@ -62,14 +62,26 @@ def _oha_fallback_threshold(driver_mem: str) -> str:
     guard proportionally (2.1M/1M keys) instead of keeping a bound sized
     for a bigger heap. Floor 131072 keeps small-heap hosts above the
     degenerate 128-key default that external-sorted every real grouping.
-    SPARK_GRAFT_OHA_FALLBACK still overrides outright."""
-    import re
+    SPARK_GRAFT_OHA_FALLBACK still overrides outright.
 
-    m = re.fullmatch(r"(\d+)([gGmM])", driver_mem.strip())
+    ``driver_mem`` takes the size forms of Spark's byte strings — plain
+    bytes, ``b``, or ``k``/``m``/``g``/``t``/``p`` with an optional ``b`` —
+    and fractional values such as ``1.5g``, which Spark itself rejects. A
+    value that does not parse warns and keeps the 16g-sized 4194304."""
+    import re
+    import warnings
+
+    m = re.fullmatch(r"(\d+(?:\.\d+)?)([kmgtp]?)b?", driver_mem.strip().lower())
     if not m:
+        warnings.warn(
+            f"cannot parse driver memory {driver_mem!r}; the ObjectHashAggregate "
+            "fallback threshold keeps 4194304, which is sized for a 16g heap",
+            RuntimeWarning,
+            stacklevel=2,
+        )
         return "4194304"
-    mib = int(m.group(1)) * (1024 if m.group(2).lower() == "g" else 1)
-    return str(max(131072, min(8 * 4194304, mib * 256)))
+    mib = float(m.group(1)) * 2.0 ** (10 * " kmgtp".index(m.group(2) or " ") - 20)
+    return str(max(131072, min(8 * 4194304, int(mib * 256))))
 
 
 def get_spark(app_name: str = "nextgenetl-spark", shuffle_partitions: int | None = None) -> SparkSession:

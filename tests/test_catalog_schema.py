@@ -308,7 +308,12 @@ def test_oha_threshold_derived_from_heap():
     """The ObjectHashAggregate fallback threshold scales with the driver
     heap (1 key per 4 KiB): the measured 16g point reproduces the r11
     value exactly, smaller heaps keep a proportional OOM guard, and
-    malformed/huge inputs stay bounded."""
+    malformed/huge inputs stay bounded. Spark's other size forms (k/t
+    suffixes, a trailing b, plain bytes) and fractional values size the
+    guard too, and a value that does not parse warns instead of silently
+    keeping the 16g-sized default."""
+    import pytest
+
     from nextgenetl_spark.session import _oha_fallback_threshold as t
 
     assert t("16g") == "4194304"       # the r11 measured point
@@ -316,7 +321,13 @@ def test_oha_threshold_derived_from_heap():
     assert t("512m") == "131072"       # floor: never the degenerate 128
     assert t("1g") == str(1024 * 256)
     assert t("256g") == str(8 * 4194304)  # cap
-    assert t("weird") == "4194304"     # unparseable -> measured default
+    assert t("1.5g") == str(1536 * 256)
+    assert t("4194304k") == t("4096m") == t("4GB") == str(4096 * 256)
+    assert t("16384k") == "131072"     # 16 MiB: the floor
+    assert t(str(2 * 1024**3)) == str(2048 * 256)  # plain bytes
+    assert t("1t") == str(8 * 4194304)
+    with pytest.warns(RuntimeWarning, match="cannot parse driver memory"):
+        assert t("weird") == "4194304"  # unparseable -> measured default
 
 
 def test_schema_cache_bypasses_remote_and_bounds_per_path(spark, tmp_path):

@@ -3,7 +3,9 @@ pair: rows added/removed/changed, re-ordered concat column, NaN in both)."""
 
 from __future__ import annotations
 
+import contextlib
 import math
+import uuid
 
 from pyspark.sql import functions as F
 
@@ -567,3 +569,224 @@ def test_lake_report_flags_small_files_and_compaction_clears_it(spark, tmp_path)
     compact_parquet_dir(spark, str(root / "shattered"), str(root / "shattered_c"), target_file_bytes=64 * 1024)
     after = {r["table"]: r for r in lake_report(str(root), target_file_bytes=64 * 1024)}
     assert after["shattered_c"]["n_files"] < 40
+
+
+# ---------------------------------------------------------------------------
+# Deferred lazy steps: a re-run over a fresh tail builds nothing it discards
+# ---------------------------------------------------------------------------
+
+_CHAIN = {
+    "steps": [
+        {"name": "rows", "dest": "rows", "sql": "SELECT k, v FROM facts"},
+        {"name": "joined", "dest": "joined",
+         "salted_join": {"big": "rows", "small": "dims", "key": "k", "auto": True, "num_salts": 4}},
+        {"name": "per_label", "dest": "per_label", "materialize": True, "skip_if_fresh": True,
+         "sql": "/* release {rel} */ SELECT label, COUNT(*) AS n, SUM(v) AS sv FROM joined GROUP BY label"},
+    ]
+}
+
+
+def _chain_pipe(spark, wh, rel):
+    """[lazy rows → lazy auto-salted join → materialized skip_if_fresh
+    consumer] over a hot-key fixture (900 of 1000 rows share k=0)."""
+    facts = spark.range(1000).select(
+        F.when(F.col("id") < 900, F.lit(0)).otherwise(F.col("id") % 10).alias("k"),
+        F.col("id").alias("v"),
+    )
+    dims = spark.createDataFrame([(i, f"L{i}") for i in range(10)], ["k", "label"])
+    pipe = Pipeline(spark, params={"rel": rel}, warehouse=wh)
+    pipe.register("facts", facts)
+    pipe.register("dims", dims)
+    return pipe, facts.join(dims, "k")
+
+
+@contextlib.contextmanager
+def _jobs_in(spark):
+    """Collects the ids of the Spark jobs the block launches."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    ids: list = []
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _outcomes(pipe):
+    return [(r["name"], r["outcome"]) for r in pipe.step_log]
+
+
+def test_fresh_rerun_defers_lazy_chain(spark, tmp_path):
+    wh = str(tmp_path / "wh")
+    first, _ = _chain_pipe(spark, wh, "r1")
+    first.run(_CHAIN)
+    assert _outcomes(first) == [("rows", "computed"), ("joined", "computed"), ("per_label", "computed")]
+    assert first.step_log[1]["skew_decision"]["salt"] is True
+    assert all(r["wall_s"] >= 0 for r in first.step_log)
+    _chain_pipe(spark, wh, "r1")[0].run(_CHAIN)  # the first read-back fills the schema memo
+
+    pipe, _ = _chain_pipe(spark, wh, "r1")
+    with _jobs_in(spark) as jobs:
+        out = pipe.run(_CHAIN)
+    assert jobs == []  # no CMS sketch, no schema inference
+    assert pipe.skew_decisions == {}
+    assert _outcomes(pipe) == [("rows", "deferred"), ("joined", "deferred"), ("per_label", "fresh")]
+    assert not any("skew_decision" in r for r in pipe.step_log)
+    assert set(out) == {"per_label"} and "joined" not in pipe.tables
+
+
+def test_stale_consumer_builds_lazy_chain_with_identical_rows(spark, tmp_path):
+    wh = str(tmp_path / "wh")
+    _chain_pipe(spark, wh, "r1")[0].run(_CHAIN)
+    before = sorted(map(tuple, spark.read.parquet(f"{wh}/per_label").collect()))
+
+    pipe, plain = _chain_pipe(spark, wh, "r2")  # new release: the consumer is stale
+    with _jobs_in(spark) as jobs:
+        pipe.run(_CHAIN)
+    assert jobs
+    assert _outcomes(pipe) == [("rows", "computed"), ("joined", "computed"), ("per_label", "computed")]
+    assert pipe.skew_decisions["joined"]["salt"] is True
+    after = sorted(map(tuple, spark.read.parquet(f"{wh}/per_label").collect()))
+    want = plain.groupBy("label").agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("sv"))
+    assert after == before == sorted(map(tuple, want.collect()))
+
+
+def test_deferred_step_is_built_on_demand(spark, tmp_path):
+    wh = str(tmp_path / "wh")
+    _chain_pipe(spark, wh, "r1")[0].run(_CHAIN)
+
+    pipe, plain = _chain_pipe(spark, wh, "r1")
+    pipe.run(_CHAIN)
+    joined = pipe.table("joined")
+    assert _outcomes(pipe)[3:] == [("rows", "computed"), ("joined", "computed")]
+    assert pipe.step_log[-1]["skew_decision"]["salt"] is True
+    assert sorted(map(tuple, joined.collect())) == sorted(map(tuple, plain.collect()))
+
+    # a later step that is built first builds every deferred step it may read
+    pipe, _ = _chain_pipe(spark, wh, "r1")
+    pipe.run(_CHAIN)
+    n = pipe.run_step({"name": "n", "dest": "n", "sql": "SELECT COUNT(*) AS n FROM joined"})
+    assert n.first()["n"] == 1000
+    assert _outcomes(pipe)[3:] == [("rows", "computed"), ("joined", "computed"), ("n", "computed")]
+
+
+def test_lazy_steps_after_the_last_materialized_step_are_built(spark, tmp_path):
+    """A lazy step with no materialized step after it is an output of the
+    run: it is built and returned even when the step before it is fresh.
+    The rule reads no SQL, so every lazy step before a built one is built."""
+    wh = str(tmp_path / "wh")
+    cfg = {
+        "steps": [
+            {"name": "a", "dest": "a", "sql": "SELECT id AS k FROM range(10)"},
+            {"name": "b", "dest": "b", "materialize": True, "skip_if_fresh": True,
+             "sql": "SELECT k, k * 2 AS v FROM a"},
+            {"name": "c", "dest": "c", "sql": "SELECT SUM(v) AS s FROM b"},
+        ]
+    }
+    Pipeline(spark, warehouse=wh).run(cfg)
+    pipe = Pipeline(spark, warehouse=wh)
+    out = pipe.run(cfg)
+    assert _outcomes(pipe) == [("a", "computed"), ("b", "fresh"), ("c", "computed")]
+    assert set(out) == {"a", "b", "c"} and out["c"].first()["s"] == 90
+
+
+# ---------------------------------------------------------------------------
+# The one-shuffle compares against the formulas they replace
+# ---------------------------------------------------------------------------
+
+def _two_except_diff(a, b):
+    """The symmetric diff as two EXCEPT DISTINCTs (the formula before the
+    one-shuffle rewrite)."""
+    return (
+        a.distinct().subtract(b.distinct()).withColumn("diff_side", F.lit("old"))
+        .unionByName(b.distinct().subtract(a.distinct()).withColumn("diff_side", F.lit("new")))
+    )
+
+
+def _two_except_tables_equal(old, new, nan_tolerant):
+    if sorted(old.columns) != sorted(new.columns):
+        return False
+    o = D._nan_safe(old) if nan_tolerant else old
+    n = new.select(*old.columns)
+    n = D._nan_safe(n) if nan_tolerant else n
+    return _two_except_diff(o, n).count() == 0
+
+
+def _canon(rows):
+    """Rows as sortable tuples that tell NaN, -0.0 and 0.0 apart."""
+    def v(x):
+        return "nan" if isinstance(x, float) and math.isnan(x) else repr(x)
+
+    return sorted(tuple(v(x) for x in r) for r in rows)
+
+
+def test_symmetric_diff_and_tables_equal_match_two_except_formula(spark):
+    import random
+
+    from pyspark.sql import types as T
+
+    from nextgenetl_spark.operators.setops import symmetric_diff
+
+    schema_a = T.StructType([T.StructField("i", T.IntegerType()), T.StructField("d", T.DoubleType()),
+                             T.StructField("s", T.StringType())])
+    schema_b = T.StructType([T.StructField("i", T.LongType()), T.StructField("d", T.DoubleType()),
+                             T.StructField("s", T.StringType())])
+    values = ([None, 0, 1, 2], [None, 0.0, -0.0, 1.5, float("nan")], [None, "a", "b"])
+    verdicts = set()
+    for seed in range(10):
+        rng = random.Random(seed)
+
+        def row():
+            return tuple(rng.choice(vs) for vs in values)
+
+        rows_a = [row() for _ in range(rng.choice([0, 1, 6, 14]))]
+        if seed % 3 == 0:
+            # same rows, reordered and duplicated, with 0.0/-0.0 swapped
+            rows_b = [(i, -d if d == 0 else d, s) for i, d, s in rows_a * 2]
+            rng.shuffle(rows_b)
+        else:
+            rows_b = [rng.choice(rows_a) for _ in range(len(rows_a) // 2)] if rows_a else []
+            rows_b += [row() for _ in range(rng.choice([0, 3, 8]))]
+        a = spark.createDataFrame(rows_a, schema_a)
+        b = spark.createDataFrame(rows_b, schema_b)
+
+        got, want = symmetric_diff(a, b), _two_except_diff(a, b)
+        assert got.dtypes == want.dtypes, seed
+        assert _canon(got.collect()) == _canon(want.collect()), seed
+
+        b_reordered = b.select("s", "d", "i")  # tables_equal selects by name
+        for tolerant in (True, False):
+            verdict = D.tables_equal(a, b_reordered, nan_tolerant=tolerant)
+            assert verdict == _two_except_tables_equal(a, b_reordered, tolerant), (seed, tolerant)
+            verdicts.add(verdict)
+    assert verdicts == {True, False}
+
+
+def test_release_report_counts_null_and_duplicate_keys(spark):
+    from pyspark.sql import types as T
+
+    old_schema = T.StructType([T.StructField("k", T.LongType()), T.StructField("v", T.IntegerType())])
+    new_schema = T.StructType([T.StructField("k", T.LongType()), T.StructField("v", T.StringType()),
+                               T.StructField("w", T.DoubleType())])
+    old = spark.createDataFrame([(1, 1), (1, 2), (2, 3), (None, 4), (None, 5), (3, 6)], old_schema)
+    new = spark.createDataFrame([(2, "x", 0.5), (2, "y", 0.5), (None, "z", 0.5), (4, "w", 0.5)], new_schema)
+    empty_old = spark.createDataFrame([], old_schema)
+    fields = {"added_fields": ["w"], "removed_fields": [], "dtype_changes": {"v": ("int", "string")}}
+
+    # old keys {1, 2, 3, NULL}, new keys {2, 4, NULL}: only 2 matches — a
+    # NULL key never equals another, so it is removed AND added
+    assert D.release_report(old, new, "k") == {
+        **fields, "added_key_count": 2, "removed_key_count": 3,
+        "row_counts": {"old": 6, "new": 4, "equal": False},
+    }
+    assert D.release_report(empty_old, new, "k") == {
+        **fields, "added_key_count": 3, "removed_key_count": 0,
+        "row_counts": {"old": 0, "new": 4, "equal": False},
+    }
+    assert D.release_report(empty_old, empty_old, "k") == {
+        "added_fields": [], "removed_fields": [], "dtype_changes": {},
+        "added_key_count": 0, "removed_key_count": 0,
+        "row_counts": {"old": 0, "new": 0, "equal": True},
+    }

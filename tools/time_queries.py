@@ -1,7 +1,8 @@
-"""Isolated min-of-3 wall timing for a subset of headline queries —
+"""Isolated min-of-3 wall timing for a subset of registry queries —
 bench.py-identical methodology (same session factory, same forcing mode,
 same warm-up, same gc discipline) for quiet-box re-adjudication of
-individual walls without the full 136-query run. Usage:
+individual walls without the full 136-query run. A query bench.py does
+not time is forced with collect(). Usage:
 
     python tools/time_queries.py <query> [<query> ...]
 """
@@ -26,7 +27,7 @@ def main() -> None:
     spark.range(1000).selectExpr("sum(id)").collect()
     out = {}
     for name in names:
-        mode = bench.HEADLINE[name]
+        mode = bench.HEADLINE.get(name, "collect")
         fn = registry[name].fn
         runs = []
         while len(runs) < (3 if not runs or runs[0] < 10.0 else 2):
